@@ -22,7 +22,7 @@ Methodology (fixed across rounds so numbers stay comparable):
   log attributes time to the right query.
 
 Round-22 addition (additive only, per the driver contract "you may ADD
-entries to queries"): a synthetic parallelism probe, ``synth_vocab_500k``.
+entries to queries"): a synthetic parallelism probe, ``synth_vocab_80m``.
 The sf0.1 fixture is a single small parquet file — one scan task, 31
 distinct words — so the declared query cannot exercise parallelism at any
 driver-supplied SF (the r21 scaling ratio was 0.48: 8 cores *beat* 32).

@@ -1,17 +1,16 @@
-"""sparklda — a PySpark-native analytics engine with the query and
-data-processing capabilities of the reference LDA-TopicModeling-using-PySpark
-repo, re-expressed DataFrame/SQL/MLlib-first.
+"""sparklda — a PySpark-native engine for the text pipeline of the reference
+LDA-TopicModeling-using-PySpark repo, re-expressed DataFrame/SQL-first.
 
-The reference (read-only at /root/reference/) is an RDD + driver-NumPy
-collapsed-Gibbs LDA job plus a pandas text-cleaning script. This engine
-reproduces the semantics (what is computed) with idiomatic Spark machinery
-(how it is computed): declarative DataFrame plans optimized by Catalyst,
-sparse long-format aggregates instead of dense one-hot shuffles, MLlib LDA
-instead of a driver-side Gibbs loop, and LSH instead of all-pairs similarity.
+The reference is an RDD job with a single-process NumPy collapsed-Gibbs LDA
+plus a pandas text-cleaning script. Of its pipeline, only the top-V
+vocabulary step exists here so far (``vocab_from_docs`` in
+``__spark_entry__.py``): a declarative DataFrame plan with a map-side
+partial aggregate and one hash shuffle, in place of the reference's
+``reduceByKey`` wordcount.
 
 Modules
 -------
-session     SparkSession bootstrap (env-parameterised cores/shuffle partitions)
+session     ``local[N]`` SparkSession bootstrap (N from ``SPARK_GRAFT_CPUS``)
 io          Parquet/CSV readers with explicit schemas over the test tables
 """
 

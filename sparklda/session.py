@@ -1,10 +1,23 @@
 """SparkSession bootstrap.
 
-Local testing runs a single JVM with many threads; the config below is
-nevertheless written for a real multi-executor cluster: AQE handles runtime
-partition coalescing and skew joins, shuffle partitions default to a
-cluster-ish value that AQE then shrinks, and Arrow is enabled so any
-pandas-UDF path is batch-vectorized rather than row-at-a-time pickled.
+The engine builds one kind of master, ``local[N]``: a single JVM with N task
+slots. N comes from ``SPARK_GRAFT_CPUS`` and defaults to the cores this
+process may run on. The shuffle is therefore bounded by one machine, so its
+width is derived from N rather than configured:
+``spark.sql.shuffle.partitions = 2 * N``, two tasks per core, the low end of
+Spark's tuning-guide advice. AQE stays on and coalesces below that at
+runtime.
+
+The trade-off: 2N partitions suit a shuffle that one machine holds, and the
+engine builds no other master. A width sized for a cluster, such as Spark's
+default of 200, makes each map task write 200 partitions for a few tens of
+thousands of pre-aggregated rows, which AQE then merges back to at most N
+reduce tasks. A caller whose shuffle outgrows 2N partitions raises the width
+with Spark's own runtime setting,
+``spark.conf.set("spark.sql.shuffle.partitions", n)``.
+
+Arrow is enabled so any pandas-UDF path is batch-vectorized rather than
+row-at-a-time pickled.
 """
 
 from __future__ import annotations
@@ -14,42 +27,28 @@ import os
 from pyspark.sql import SparkSession
 
 
-def get_spark(app_name: str = "sparklda", shuffle_partitions: int | None = None) -> SparkSession:
-    """Build (or fetch) a SparkSession tuned for this engine.
+def _cores() -> int:
+    """Task slots of the ``local[N]`` master, from ``SPARK_GRAFT_CPUS``."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS")
+    if raw is None:
+        return len(os.sched_getaffinity(0))
+    # Fail here, not later as an opaque master-URL error from the JVM.
+    try:
+        n = int(raw)
+    except ValueError:
+        raise ValueError(f"SPARK_GRAFT_CPUS={raw!r} is not an integer") from None
+    if n < 1:
+        raise ValueError(f"SPARK_GRAFT_CPUS must be >= 1, got {raw!r}")
+    return n
 
-    Scale stance (100 TB): every knob here is either scale-neutral or
-    explicitly an at-scale win — AQE coalescing/skew handling, broadcast
-    threshold for small dims, Arrow for the few Python-side operators.
-    """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    if shuffle_partitions is None:
-        # Scale-adaptive, not tuned to the local core count: start from
-        # Spark's default 200 (overridable per deployment via env) and let
-        # AQE coalesce small post-shuffle partitions down at runtime. On a
-        # cluster this is raised via SPARK_GRAFT_SHUFFLE_PARTITIONS to
-        # ~(total shuffle bytes / 128MB); locally AQE collapses the tiny
-        # shuffles to a handful of partitions either way.
-        env_sp = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-        if env_sp is None:
-            shuffle_partitions = 200
-        else:
-            # Fail loudly on invalid input: a silent fallback (or a value
-            # Spark rejects only at job time, like 0) hides a misconfigured
-            # deployment behind default behaviour.
-            try:
-                shuffle_partitions = int(env_sp)
-            except ValueError:
-                raise ValueError(
-                    f"SPARK_GRAFT_SHUFFLE_PARTITIONS={env_sp!r} is not an integer"
-                ) from None
-            if shuffle_partitions < 1:
-                raise ValueError(
-                    f"SPARK_GRAFT_SHUFFLE_PARTITIONS must be >= 1, got {env_sp!r}"
-                )
+
+def get_spark(app_name: str = "sparklda") -> SparkSession:
+    """Build (or fetch) a ``local[N]`` SparkSession tuned for this engine."""
+    cpus = _cores()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(2 * cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -48,18 +48,18 @@ def test_write_parquet_partition_by(spark, tmp_path):
     assert spark.read.parquet(out).count() == 100
 
 
-def test_shuffle_partitions_env_rejects_invalid():
-    """ADVICE r21: '0' used to pass isdigit() and blow up only at job time;
-    non-numeric values silently fell back to 200."""
+def test_cpus_env_rejects_invalid():
+    """A bad core count fails at session build, not later as an opaque
+    master-URL error from the JVM."""
     for bad in ("0", "-4", "abc", ""):
-        with mock.patch.dict(os.environ, {"SPARK_GRAFT_SHUFFLE_PARTITIONS": bad}):
-            with pytest.raises(ValueError):
+        with mock.patch.dict(os.environ, {"SPARK_GRAFT_CPUS": bad}):
+            with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
                 session_mod.get_spark("never-built")
 
 
-def test_shuffle_partitions_env_accepts_valid(spark):
-    """A valid override parses; the already-running session is reused, so
-    this only exercises the parse path, not a rebuild."""
-    with mock.patch.dict(os.environ, {"SPARK_GRAFT_SHUFFLE_PARTITIONS": "300"}):
-        s = session_mod.get_spark("sparklda-io-tests")
-    assert s is spark
+def test_shuffle_partitions_are_twice_the_cores(spark):
+    """The master runs SPARK_GRAFT_CPUS task slots (default: the usable
+    cores) and the shuffle width is twice that."""
+    n = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+    assert spark.sparkContext.master == f"local[{n}]"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == str(2 * n)

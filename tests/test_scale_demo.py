@@ -27,6 +27,7 @@ from pyspark.sql.window import Window
 
 import __spark_entry__ as entry_mod
 from bench import synth_docs
+from plan_text import formatted_plan
 from sparklda.session import get_spark
 
 # >= 1M distinct keys per the round-21 verdict; ~10M tokens keeps the shared
@@ -62,12 +63,6 @@ def r20_fullwindow(docs, v):
     )
 
 
-def _plan(spark, df):
-    return df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-
-
 def _time_noop(df) -> float:
     t0 = time.perf_counter()
     df.write.format("noop").mode("overwrite").save()
@@ -78,8 +73,8 @@ def test_plan_shapes_old_vs_new(spark):
     """Cheap, always-on: the old shape really is the scale-killer plan and
     the new shape really avoids it, on the same synthetic input."""
     docs = synth_docs(spark, 1000, 5, 100, 4)
-    old_plan = _plan(spark, r20_fullwindow(docs, V))
-    new_plan = _plan(spark, entry_mod.vocab_from_docs(docs, V))
+    old_plan = formatted_plan(r20_fullwindow(docs, V))
+    new_plan = formatted_plan(entry_mod.vocab_from_docs(docs, V))
     assert "SinglePartition" in old_plan, old_plan
     assert "SinglePartition" not in new_plan, new_plan
     assert "TakeOrderedAndProject" in new_plan, new_plan

@@ -7,10 +7,13 @@ single-partition rank, so the window never sees more than VOCAB_SIZE rows.
 
 from __future__ import annotations
 
+import re
+
 import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
+from plan_text import formatted_plan
 from sparklda.session import get_spark
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -52,18 +55,12 @@ def test_vocab_topv_schema(spark):
     ]
 
 
-def _formatted_plan(spark, df):
-    return df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-
-
 def test_vocab_topv_plan_is_scale_safe(spark):
     """The r21 optimization contract: one shuffle total (the groupBy), a
     distributed TakeOrderedAndProject for top-V, and no SinglePartition
     exchange dragging the full vocabulary through one task."""
     df = entry_mod.queries()["vocab_topv"](spark, SF_DIR)
-    plan = _formatted_plan(spark, df)
+    plan = formatted_plan(df)
     assert "TakeOrderedAndProject" in plan
     assert "SinglePartition" not in plan
     n_exchange = sum(
@@ -79,7 +76,7 @@ def test_vocab_topv_scan_prunes_to_text(spark):
     table has 5 columns, the query needs only `text`. A refactor that widens
     ReadSchema silently quintuples scan bytes at 100 TB."""
     df = entry_mod.queries()["vocab_topv"](spark, SF_DIR)
-    plan = _formatted_plan(spark, df)
+    plan = formatted_plan(df)
     assert "ReadSchema: struct<text:string>" in plan, plan
 
 
@@ -89,13 +86,29 @@ def test_vocab_topv_partial_agg_precedes_shuffle(spark):
     ships at most one row per distinct word — the Zipfian-head word can
     contribute <= #map-tasks shuffle rows, never its corpus frequency."""
     df = entry_mod.queries()["vocab_topv"](spark, SF_DIR)
-    plan = _formatted_plan(spark, df)
+    plan = formatted_plan(df)
     i_partial = plan.index("partial_count")
     i_exchange = plan.index("hashpartitioning(word")
     # In `formatted` output, operator detail blocks appear bottom-up in
     # execution order, so the partial aggregate's block precedes the
     # Exchange's block iff it executes first (feeds the shuffle).
     assert i_partial < i_exchange, plan
+
+
+def test_vocab_topv_shuffle_width_is_twice_the_cores(spark):
+    """The one shuffle is hash-partitioned on `word` into 2N partitions for a
+    local[N] master, so a fixed width cannot come back silently."""
+    df = entry_mod.queries()["vocab_topv"](spark, SF_DIR)
+    plan = formatted_plan(df)
+    widths = re.findall(r"hashpartitioning\(word#\d+, (\d+)\)", plan)
+    assert widths and set(widths) == {str(2 * spark.sparkContext.defaultParallelism)}, plan
+
+
+def test_vocab_rejects_nonpositive_size(spark):
+    docs = spark.createDataFrame([("a b a",)], "text string")
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="vocab_size"):
+            entry_mod.vocab_from_docs(docs, bad)
 
 
 def test_vocab_boundary_ties_at_cutoff_match_oracle(spark, tmp_path):
@@ -123,16 +136,7 @@ def test_vocab_boundary_ties_at_cutoff_match_oracle(spark, tmp_path):
 
     con = duckdb.connect()
     con.execute(f"CREATE VIEW documents AS SELECT * FROM '{pq}/*.parquet'")
-    oracle = f"""
-        WITH toks AS (
-            SELECT unnest(string_split(text, ' ')) AS word FROM documents
-        ), wc AS (
-            SELECT word, COUNT(*) AS count FROM toks WHERE word <> '' GROUP BY word
-        )
-        SELECT word, count, ROW_NUMBER() OVER (ORDER BY count DESC, word ASC) - 1 AS id
-        FROM wc ORDER BY id LIMIT {v}
-    """
-    orows = sorted(tuple(r) for r in con.execute(oracle).fetchall())
+    orows = sorted(tuple(r) for r in con.execute(entry_mod.vocab_oracle_sql(v)).fetchall())
     assert len(srows) == v
     assert srows == orows
     # the cutoff row really is inside the tie group (tie_a..tie_e kept,
