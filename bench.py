@@ -5,7 +5,11 @@ from ``$SPARK_GRAFT_CPUS`` (master ``local[$SPARK_GRAFT_CPUS]`` via
 ``sparklda.session.get_spark``), times every ``__spark_entry__.queries()``
 entry, and prints exactly ONE JSON line::
 
-    {"metric": ..., "value": N, "unit": "sec", "queries": {name: sec}, "sf": ...}
+    {"metric": ..., "value": N, "unit": "sec", "queries": {name: sec},
+     "probes": {name: sec}, "sf": ...}
+
+``queries`` holds exactly the declared ``queries()`` set and ``value`` is
+the sum of its medians. ``probes`` holds measurements outside that set.
 
 Methodology (fixed across rounds so numbers stay comparable):
 
@@ -14,25 +18,21 @@ Methodology (fixed across rounds so numbers stay comparable):
   discards the result, so we time the computation, not an output format;
 * per query: 1 untimed warmup run (JVM/codegen warm, file listing cached),
   then ``BENCH_RUNS`` timed runs (default 3), reporting the median;
-* ``value`` is the sum of the per-query medians **of the declared queries
-  only** — byte-compatible with the round-21 definition, where the declared
-  set was the whole ``queries`` dict, so totals stay comparable across
-  rounds;
+* ``value`` is the sum of the per-query medians, so totals stay comparable
+  across rounds;
 * each run is labelled with ``setJobDescription`` so the Spark UI/event
   log attributes time to the right query.
 
-Round-22 addition (additive only, per the driver contract "you may ADD
-entries to queries"): a synthetic parallelism probe, ``synth_vocab_80m``.
+The one probe, ``synth_vocab_80m``, is the bench's parallelism signal.
 The sf0.1 fixture is a single small parquet file — one scan task, 31
 distinct words — so the declared query cannot exercise parallelism at any
-driver-supplied SF (the r21 scaling ratio was 0.48: 8 cores *beat* 32).
+fixture scale factor: on it, 8 cores ran faster than 32 (scaling ratio 0.48).
 The probe generates a deterministic in-process corpus (``spark.range`` +
 expressions, 64 partitions, 80M tokens, 100k distinct words), runs the
 exact declared transformation (``vocab_from_docs``), and is timed with the
 same noop-median methodology (2 warmups instead of 1 — measured: the first
 post-warmup run of this expression tree is still 1.5-2x steady state while
-the JIT finishes). Its time is reported in ``queries`` but deliberately NOT
-added to ``value``. Nothing is cached or persisted: every run regenerates
+the JIT finishes). Nothing is cached or persisted: every run regenerates
 the corpus from ``spark.range``.
 """
 
@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
 from sparklda.session import get_spark
+from sparklda.vocab import vocab_from_docs
 
 RUNS = int(os.environ.get("BENCH_RUNS", "3"))
 
@@ -93,7 +94,8 @@ def _sf_from_dir(sf_dir: str) -> float | None:
     return None
 
 
-def _time_noop(df) -> float:
+def time_noop(df: DataFrame) -> float:
+    """Wall-clock seconds to compute ``df`` into the noop sink."""
     t0 = time.perf_counter()
     df.write.format("noop").mode("overwrite").save()
     return time.perf_counter() - t0
@@ -108,25 +110,27 @@ def main() -> None:
         sc = spark.sparkContext
         sc.setJobDescription(f"bench:{name}:warmup")
         for _ in range(warmups):  # untimed; a fresh DataFrame every run
-            _time_noop(build())
+            time_noop(build())
         times = []
         for i in range(RUNS):
             sc.setJobDescription(f"bench:{name}:run{i}")
-            times.append(_time_noop(build()))
+            times.append(time_noop(build()))
         sc.setJobDescription(None)
         return round(statistics.median(times), 4)
 
     per_query: dict[str, float] = {}
     for name, fn in entry_mod.queries().items():
         per_query[name] = bench_one(name, lambda: fn(spark, sf_dir))
-    value = round(sum(per_query.values()), 4)  # declared queries only
+    value = round(sum(per_query.values()), 4)
 
-    # Additive parallelism probe (see module docstring); not part of `value`.
-    per_query["synth_vocab_80m"] = bench_one(
-        "synth_vocab_80m",
-        lambda: entry_mod.vocab_from_docs(synth_docs(spark, **SYNTH)),
-        warmups=2,
-    )
+    # Parallelism probe (see module docstring); not part of `value`.
+    probes = {
+        "synth_vocab_80m": bench_one(
+            "synth_vocab_80m",
+            lambda: vocab_from_docs(synth_docs(spark, **SYNTH)),
+            warmups=2,
+        )
+    }
 
     sf = _sf_from_dir(sf_dir)
     if sf is None:
@@ -138,6 +142,7 @@ def main() -> None:
         "value": value,
         "unit": "sec",
         "queries": per_query,
+        "probes": probes,
         "sf": sf,
     }
     # The ONE contract line goes to stdout; everything else (Spark logs) is stderr.

@@ -1,11 +1,8 @@
-"""Table readers with explicit schemas (SURVEY.md 2.1 S4/S6).
+"""Reader for the ``documents`` table and a zstd Parquet writer.
 
-The reference "parses" CSV with ``line.split(',')``
-(/root/reference/src/LDATopicModelingWithGibbs.py:31) — correct only because
-an upstream cleaner stripped every comma. This engine never relies on that
-cross-file invariant: all sources are real readers with explicit StructType
-schemas, so schema drift is an error instead of silent corruption, and
-Parquet (columnar, predicate-pushdown-friendly) is the at-rest format.
+The reader applies an explicit StructType schema, so schema drift is an
+error instead of silent corruption and no inference pass is paid. Parquet
+(columnar, predicate-pushdown-friendly) is the at-rest format.
 """
 
 from __future__ import annotations
@@ -15,97 +12,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-# Explicit schemas: reads fail loudly on drift, and the reader never pays an
-# inference pass. Names/types match the driver-generated fixtures (TESTDATA.md).
+# Names/types match the fixture tables (TESTDATA.md).
 SCHEMAS: dict[str, T.StructType] = {
-    "region": T.StructType(
-        [
-            T.StructField("r_regionkey", T.IntegerType()),
-            T.StructField("r_name", T.StringType()),
-        ]
-    ),
-    "nation": T.StructType(
-        [
-            T.StructField("n_nationkey", T.IntegerType()),
-            T.StructField("n_name", T.StringType()),
-            T.StructField("n_regionkey", T.IntegerType()),
-        ]
-    ),
-    "customer": T.StructType(
-        [
-            T.StructField("c_custkey", T.LongType()),
-            T.StructField("c_name", T.StringType()),
-            T.StructField("c_nationkey", T.IntegerType()),
-            T.StructField("c_acctbal", T.DoubleType()),
-            T.StructField("c_mktsegment", T.StringType()),
-        ]
-    ),
-    "supplier": T.StructType(
-        [
-            T.StructField("s_suppkey", T.LongType()),
-            T.StructField("s_name", T.StringType()),
-            T.StructField("s_nationkey", T.IntegerType()),
-            T.StructField("s_acctbal", T.DoubleType()),
-        ]
-    ),
-    "part": T.StructType(
-        [
-            T.StructField("p_partkey", T.LongType()),
-            T.StructField("p_name", T.StringType()),
-            T.StructField("p_brand", T.StringType()),
-            T.StructField("p_type", T.StringType()),
-            T.StructField("p_size", T.IntegerType()),
-            T.StructField("p_retailprice", T.DoubleType()),
-        ]
-    ),
-    "orders": T.StructType(
-        [
-            T.StructField("o_orderkey", T.LongType()),
-            T.StructField("o_custkey", T.LongType()),
-            T.StructField("o_orderstatus", T.StringType()),
-            T.StructField("o_totalprice", T.DoubleType()),
-            T.StructField("o_orderdate", T.TimestampType()),
-            T.StructField("o_orderpriority", T.StringType()),
-        ]
-    ),
-    "lineitem": T.StructType(
-        [
-            T.StructField("l_orderkey", T.LongType()),
-            T.StructField("l_partkey", T.LongType()),
-            T.StructField("l_suppkey", T.LongType()),
-            T.StructField("l_linenumber", T.IntegerType()),
-            T.StructField("l_quantity", T.DoubleType()),
-            T.StructField("l_extendedprice", T.DoubleType()),
-            T.StructField("l_discount", T.DoubleType()),
-            T.StructField("l_tax", T.DoubleType()),
-            T.StructField("l_returnflag", T.StringType()),
-            T.StructField("l_linestatus", T.StringType()),
-            T.StructField("l_shipdate", T.TimestampType()),
-        ]
-    ),
-    "events": T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    ),
     "documents": T.StructType(
         [
             T.StructField("doc_id", T.LongType()),
@@ -115,53 +23,25 @@ SCHEMAS: dict[str, T.StructType] = {
             T.StructField("n_chars", T.LongType()),
         ]
     ),
-    "embeddings": T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-            T.StructField("label", T.IntegerType()),
-        ]
-    ),
 }
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
+def read_table(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
+    """Read ``<sf_dir>/<name>.parquet`` as a DataFrame with its declared schema.
 
-def read_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
-    """Read one fixture table as a DataFrame with its declared schema."""
+    Raises ``KeyError`` for a table with no declared schema.
+    """
     if name not in SCHEMAS:
         raise KeyError(f"unknown table {name!r}; known: {sorted(SCHEMAS)}")
     path = os.path.join(sf_dir, f"{name}.parquet")
     return spark.read.schema(SCHEMAS[name]).parquet(path)
 
 
-def read_documents_csv(spark: SparkSession, path: str) -> DataFrame:
-    """CSV corpus reader replacing the reference's S6/S7 textFile+split
-    (/root/reference/src/LDATopicModelingWithGibbs.py:28-31): a real CSV
-    parser with explicit schema instead of str.split(',')."""
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.StringType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    return spark.read.schema(schema).option("header", "false").csv(path)
-
-
-def write_csv(df: DataFrame, path: str, header: bool = False, mode: str = "overwrite") -> None:
-    """CSV sink (SURVEY.md 2.1 S3/S5): distributed writer, one file per
-    partition — no driver-side csv.writer loop."""
-    df.write.mode(mode).option("header", str(header).lower()).csv(path)
-
-
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:
-    """Preferred sink at scale: columnar, splittable, stats for pruning.
+def write_parquet(df: DataFrame, path: str) -> None:
+    """Write ``df`` to ``path`` as zstd Parquet, replacing what is there.
 
     zstd codec per the optimization guide §6: markedly smaller files than
     the snappy default at similar read speed, so every downstream scan of
     anything this engine writes reads fewer bytes.
     """
-    w = df.write.mode(mode).option("compression", "zstd")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
+    df.write.mode("overwrite").option("compression", "zstd").parquet(path)

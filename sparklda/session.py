@@ -5,8 +5,8 @@ slots. N comes from ``SPARK_GRAFT_CPUS`` and defaults to the cores this
 process may run on. The shuffle is therefore bounded by one machine, so its
 width is derived from N rather than configured:
 ``spark.sql.shuffle.partitions = 2 * N``, two tasks per core, the low end of
-Spark's tuning-guide advice. AQE stays on and coalesces below that at
-runtime.
+Spark's tuning-guide advice. AQE, on by default in Spark 4, coalesces
+below that at runtime.
 
 The trade-off: 2N partitions suit a shuffle that one machine holds, and the
 engine builds no other master. A width sized for a cluster, such as Spark's
@@ -15,9 +15,6 @@ thousands of pre-aggregated rows, which AQE then merges back to at most N
 reduce tasks. A caller whose shuffle outgrows 2N partitions raises the width
 with Spark's own runtime setting,
 ``spark.conf.set("spark.sql.shuffle.partitions", n)``.
-
-Arrow is enabled so any pandas-UDF path is batch-vectorized rather than
-row-at-a-time pickled.
 """
 
 from __future__ import annotations
@@ -49,11 +46,6 @@ def get_spark(app_name: str = "sparklda") -> SparkSession:
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(2 * cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

@@ -1,4 +1,4 @@
-"""Tests for sparklda.io write helpers and session env validation."""
+"""Tests for the sparklda.io writer and the session sparklda.session builds."""
 
 from __future__ import annotations
 
@@ -40,14 +40,6 @@ def test_write_parquet_uses_zstd_and_roundtrips(spark, tmp_path):
     assert back == sorted(tuple(r) for r in df.collect())
 
 
-def test_write_parquet_partition_by(spark, tmp_path):
-    out = str(tmp_path / "p.parquet")
-    df = spark.range(0, 100).selectExpr("id", "cast(id % 3 as string) AS k")
-    write_parquet(df, out, partition_by=["k"])
-    assert {d for d in os.listdir(out) if d.startswith("k=")} == {"k=0", "k=1", "k=2"}
-    assert spark.read.parquet(out).count() == 100
-
-
 def test_cpus_env_rejects_invalid():
     """A bad core count fails at session build, not later as an opaque
     master-URL error from the JVM."""
@@ -63,3 +55,12 @@ def test_shuffle_partitions_are_twice_the_cores(spark):
     n = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     assert spark.sparkContext.master == f"local[{n}]"
     assert spark.conf.get("spark.sql.shuffle.partitions") == str(2 * n)
+
+
+def test_session_has_aqe_coalescing_on(spark):
+    """The 2N shuffle width relies on AQE coalescing below it at runtime.
+    get_spark does not set these, so they hold only through Spark's
+    defaults; a Spark upgrade or a config file that turns them off fails
+    here."""
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    assert spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled") == "true"

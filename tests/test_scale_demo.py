@@ -19,16 +19,15 @@ reproduces the numbers:
 from __future__ import annotations
 
 import os
-import time
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-import __spark_entry__ as entry_mod
-from bench import synth_docs
+from bench import synth_docs, time_noop
 from plan_text import formatted_plan
 from sparklda.session import get_spark
+from sparklda.vocab import vocab_from_docs
 
 # >= 1M distinct keys per the round-21 verdict; ~10M tokens keeps the shared
 # wordcount cost small relative to the single-task sort the old plan pays.
@@ -63,18 +62,12 @@ def r20_fullwindow(docs, v):
     )
 
 
-def _time_noop(df) -> float:
-    t0 = time.perf_counter()
-    df.write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0
-
-
 def test_plan_shapes_old_vs_new(spark):
     """Cheap, always-on: the old shape really is the scale-killer plan and
     the new shape really avoids it, on the same synthetic input."""
     docs = synth_docs(spark, 1000, 5, 100, 4)
     old_plan = formatted_plan(r20_fullwindow(docs, V))
-    new_plan = formatted_plan(entry_mod.vocab_from_docs(docs, V))
+    new_plan = formatted_plan(vocab_from_docs(docs, V))
     assert "SinglePartition" in old_plan, old_plan
     assert "SinglePartition" not in new_plan, new_plan
     assert "TakeOrderedAndProject" in new_plan, new_plan
@@ -86,7 +79,7 @@ def test_plan_shapes_old_vs_new(spark):
 )
 def test_takeordered_beats_fullwindow_at_scale(spark):
     def build_new():
-        return entry_mod.vocab_from_docs(
+        return vocab_from_docs(
             synth_docs(spark, N_DOCS, WORDS_PER_DOC, N_DISTINCT, PARTS), V
         )
 
@@ -100,12 +93,12 @@ def test_takeordered_beats_fullwindow_at_scale(spark):
     # than one pass (first timed run is otherwise 2-4x the steady state).
     for tag, build in (("new", build_new), ("old", build_old)):
         sc.setJobDescription(f"scale-demo:{tag}:warmup")
-        _time_noop(build())
-        _time_noop(build())
+        time_noop(build())
+        time_noop(build())
     sc.setJobDescription("scale-demo:new:timed")
-    new_times = [_time_noop(build_new()) for _ in range(3)]
+    new_times = [time_noop(build_new()) for _ in range(3)]
     sc.setJobDescription("scale-demo:old:timed")
-    old_times = [_time_noop(build_old()) for _ in range(3)]
+    old_times = [time_noop(build_old()) for _ in range(3)]
     sc.setJobDescription(None)
 
     new_best, old_best = min(new_times), min(old_times)

@@ -1,8 +1,10 @@
 """Tests for the declared vocab_topv query.
 
-Covers: DuckDB-oracle equivalence (what the driver checks), determinism,
-and the r21 plan-shape guarantee — top-V is taken *before* any
-single-partition rank, so the window never sees more than VOCAB_SIZE rows.
+Covers: DuckDB-oracle equivalence on the fixture, on count ties at the V
+cutoff and on edge inputs (null, empty and whitespace-only docs, repeated
+separators, Unicode), determinism, and the r21 plan-shape guarantee —
+top-V is taken *before* any single-partition rank, so the window never sees
+more than VOCAB_SIZE rows.
 """
 
 from __future__ import annotations
@@ -15,6 +17,7 @@ import pytest
 import __spark_entry__ as entry_mod
 from plan_text import formatted_plan
 from sparklda.session import get_spark
+from sparklda.vocab import vocab_from_docs
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -108,7 +111,24 @@ def test_vocab_rejects_nonpositive_size(spark):
     docs = spark.createDataFrame([("a b a",)], "text string")
     for bad in (0, -1):
         with pytest.raises(ValueError, match="vocab_size"):
-            entry_mod.vocab_from_docs(docs, bad)
+            vocab_from_docs(docs, bad)
+
+
+def _vocab_matches_oracle(spark, tmp_path, rows, v):
+    """Write ``rows`` of (doc_id, text) as parquet, run ``vocab_from_docs``
+    on it and ``vocab_oracle_sql(v)`` in DuckDB over the same files, assert
+    the two row sets are equal and return the Spark rows."""
+    pq = str(tmp_path / "docs.parquet")
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(pq)
+
+    docs = spark.read.parquet(pq)
+    srows = sorted(tuple(r) for r in vocab_from_docs(docs, v).collect())
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{pq}/*.parquet'")
+    orows = sorted(tuple(r) for r in con.execute(entry_mod.vocab_oracle_sql(v)).fetchall())
+    assert srows == orows
+    return srows
 
 
 def test_vocab_boundary_ties_at_cutoff_match_oracle(spark, tmp_path):
@@ -128,18 +148,34 @@ def test_vocab_boundary_ties_at_cutoff_match_oracle(spark, tmp_path):
         counts[f"lo{i:02d}"] = 5
     assert len(counts) == 35 > v
     rows = [(i, " ".join([w] * n)) for i, (w, n) in enumerate(sorted(counts.items()))]
-    pq = str(tmp_path / "docs.parquet")
-    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(pq)
 
-    docs = spark.read.parquet(pq)
-    srows = sorted(tuple(r) for r in entry_mod.vocab_from_docs(docs, v).collect())
-
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{pq}/*.parquet'")
-    orows = sorted(tuple(r) for r in con.execute(entry_mod.vocab_oracle_sql(v)).fetchall())
+    srows = _vocab_matches_oracle(spark, tmp_path, rows, v)
     assert len(srows) == v
-    assert srows == orows
     # the cutoff row really is inside the tie group (tie_a..tie_e kept,
     # tie_f.. dropped by word ASC) — i.e. the boundary was exercised
     kept = {w for w, _, _ in srows}
     assert "tie_e" in kept and "tie_f" not in kept
+
+
+# Tokens are split on single spaces only, so "\t\n" and "b\ta" are words and
+# runs of spaces yield empty tokens, which are dropped. Ten distinct words:
+# four tie at count 2 (a, café, 数据, 🙂), so V=3 cuts inside a tie ordered by
+# UTF-8 bytes; "café" and "Café" differ only in case and stay two words.
+EDGE_DOCS = [
+    (0, None),
+    (1, ""),
+    (2, "   "),
+    (3, "\t\n"),
+    (4, "a  b\ta"),
+    (5, "  lead trail  "),
+    (6, "café Café café"),
+    (7, "数据 数据 分析"),
+    (8, "🙂 a 🙂"),
+]
+EDGE_DISTINCT_WORDS = 10
+
+
+@pytest.mark.parametrize("v", [1, 3, EDGE_DISTINCT_WORDS + 5])
+def test_vocab_edge_inputs_match_oracle(spark, tmp_path, v):
+    srows = _vocab_matches_oracle(spark, tmp_path, EDGE_DOCS, v)
+    assert len(srows) == min(v, EDGE_DISTINCT_WORDS)
