@@ -5,35 +5,20 @@ from ``$SPARK_GRAFT_CPUS`` (master ``local[$SPARK_GRAFT_CPUS]`` via
 ``sparklda.session.get_spark``), times every ``__spark_entry__.queries()``
 entry, and prints exactly ONE JSON line::
 
-    {"metric": ..., "value": N, "unit": "sec", "queries": {name: sec},
-     "probes": {name: sec}, "sf": ...}
+    {"metric": ..., "value": N, "unit": "sec", "queries": {name: sec}, "sf": ...}
 
 ``queries`` holds exactly the declared ``queries()`` set and ``value`` is
-the sum of its medians. ``probes`` holds measurements outside that set.
+the sum of its medians. Seeded synthetic corpora at scale are benchmarked
+by ``perfbench/``, not here.
 
 Methodology (fixed across rounds so numbers stay comparable):
 
-* the timed action is the noop sink (``format("noop")``) per the
-  optimization guide §1.4 — it computes every column of every row and
-  discards the result, so we time the computation, not an output format;
+* the timed action is the noop sink (``format("noop")``): it computes every
+  row and discards it, so we time the computation, not an output format;
 * per query: 1 untimed warmup run (JVM/codegen warm, file listing cached),
-  then ``BENCH_RUNS`` timed runs (default 3), reporting the median;
-* ``value`` is the sum of the per-query medians, so totals stay comparable
-  across rounds;
-* each run is labelled with ``setJobDescription`` so the Spark UI/event
-  log attributes time to the right query.
-
-The one probe, ``synth_vocab_80m``, is the bench's parallelism signal.
-The sf0.1 fixture is a single small parquet file — one scan task, 31
-distinct words — so the declared query cannot exercise parallelism at any
-fixture scale factor: on it, 8 cores ran faster than 32 (scaling ratio 0.48).
-The probe generates a deterministic in-process corpus (``spark.range`` +
-expressions, 64 partitions, 80M tokens, 100k distinct words), runs the
-exact declared transformation (``vocab_from_docs``), and is timed with the
-same noop-median methodology (2 warmups instead of 1 — measured: the first
-post-warmup run of this expression tree is still 1.5-2x steady state while
-the JIT finishes). Nothing is cached or persisted: every run regenerates
-the corpus from ``spark.range``.
+  then ``BENCH_RUNS`` timed runs (default 3, at least 1), reporting the median;
+* each run is labelled with ``setJobDescription`` so the event log
+  attributes time to the right query.
 """
 
 from __future__ import annotations
@@ -44,54 +29,30 @@ import statistics
 import sys
 import time
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 import __spark_entry__ as entry_mod
 from sparklda.session import get_spark
-from sparklda.vocab import vocab_from_docs
-
-RUNS = int(os.environ.get("BENCH_RUNS", "3"))
-
-# Synthetic probe sizing: big enough that 32 cores measurably beat 8
-# (compute-bound map stage: concat/hash-generate + split/explode + map-side
-# partial agg of 80M tokens over 64 input partitions; 100k distinct words
-# keeps the shuffle small so scaling reflects compute, not local-mode
-# shuffle bandwidth), small enough to keep the whole bench ~1 minute.
-# Fixed partition count so the work is identical at every $SPARK_GRAFT_CPUS.
-SYNTH = {"n_docs": 4_000_000, "words_per_doc": 20, "n_distinct": 100_000, "parts": 64}
 
 
-def synth_docs(
-    spark: SparkSession, n_docs: int, words_per_doc: int, n_distinct: int, parts: int
-) -> DataFrame:
-    """Deterministic synthetic corpus with a `text` column.
-
-    Built from ``spark.range`` + expressions only (no fixture, no files, no
-    rand()): word j of doc i is ``w<pmod(xxhash64(i*W+j), n_distinct)>``,
-    so the corpus is reproducible across runs, core counts and retries
-    (guide §2.5 warns against rand()-derived keys).
-    """
-    cols = [
-        F.concat(
-            F.lit("w"),
-            F.pmod(
-                F.xxhash64(F.col("id") * words_per_doc + j), F.lit(n_distinct)
-            ).cast("string"),
-        )
-        for j in range(words_per_doc)
-    ]
-    return spark.range(0, n_docs, 1, parts).select(F.concat_ws(" ", *cols).alias("text"))
+def _runs() -> int:
+    """Timed runs from ``BENCH_RUNS`` (default 3), checked before the JVM starts."""
+    raw = os.environ.get("BENCH_RUNS", "3")
+    try:
+        n = int(raw)
+    except ValueError:
+        raise ValueError(f"BENCH_RUNS={raw!r} is not an integer") from None
+    if n < 1:
+        raise ValueError(f"BENCH_RUNS must be >= 1, got {raw!r}")
+    return n
 
 
 def _sf_from_dir(sf_dir: str) -> float | None:
     tail = os.path.basename(sf_dir.rstrip("/"))
-    if tail.startswith("sf"):
-        try:
-            return float(tail[2:])
-        except ValueError:
-            return None
-    return None
+    try:
+        return float(tail[2:]) if tail.startswith("sf") else None
+    except ValueError:
+        return None
 
 
 def time_noop(df: DataFrame) -> float:
@@ -102,17 +63,17 @@ def time_noop(df: DataFrame) -> float:
 
 
 def main() -> None:
+    runs = _runs()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("sparklda-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    def bench_one(name: str, build, warmups: int = 1) -> float:
+    def bench_one(name: str, build) -> float:
         sc = spark.sparkContext
         sc.setJobDescription(f"bench:{name}:warmup")
-        for _ in range(warmups):  # untimed; a fresh DataFrame every run
-            time_noop(build())
+        time_noop(build())  # untimed; a fresh DataFrame every run
         times = []
-        for i in range(RUNS):
+        for i in range(runs):
             sc.setJobDescription(f"bench:{name}:run{i}")
             times.append(time_noop(build()))
         sc.setJobDescription(None)
@@ -123,28 +84,13 @@ def main() -> None:
         per_query[name] = bench_one(name, lambda: fn(spark, sf_dir))
     value = round(sum(per_query.values()), 4)
 
-    # Parallelism probe (see module docstring); not part of `value`.
-    probes = {
-        "synth_vocab_80m": bench_one(
-            "synth_vocab_80m",
-            lambda: vocab_from_docs(synth_docs(spark, **SYNTH)),
-            warmups=2,
-        )
-    }
-
     sf = _sf_from_dir(sf_dir)
     if sf is None:
         print(f"bench: cannot parse scale factor from {sf_dir!r}; "
               'emitting "sf": null', file=sys.stderr)
 
-    out = {
-        "metric": "declared_query_suite_noop_median_sec",
-        "value": value,
-        "unit": "sec",
-        "queries": per_query,
-        "probes": probes,
-        "sf": sf,
-    }
+    out = {"metric": "declared_query_suite_noop_median_sec", "value": value,
+           "unit": "sec", "queries": per_query, "sf": sf}
     # The ONE contract line goes to stdout; everything else (Spark logs) is stderr.
     print(json.dumps(out), flush=True)
     spark.stop()

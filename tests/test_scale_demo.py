@@ -5,8 +5,8 @@ beats the r20 shape — rank the ENTIRE vocabulary through an
 ``Exchange SinglePartition`` + full ``Sort``, then limit — by ~10x at
 millions of distinct words. The fixture corpus has 31 distinct words at
 every SF, so no fixture bench can show this. This test regenerates the
-evidence from an in-process synthetic corpus (``spark.range`` + expr,
-no fixture dependency) at >= 1M distinct keys, and asserts the
+evidence from a seeded synthetic corpus (``perfbench.corpus``: ``spark.range``
++ expr, no fixture dependency) at >= 1M distinct keys, and asserts the
 TakeOrderedAndProject path wins by a clear margin.
 
 It is wall-clock heavy (~1-2 min) and environment-sensitive, so it is
@@ -18,13 +18,15 @@ reproduces the numbers:
 
 from __future__ import annotations
 
+import dataclasses
 import os
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from bench import synth_docs, time_noop
+from bench import time_noop
+from perfbench.corpus import HIGHCARD, corpus
 from plan_text import formatted_plan
 from sparklda.session import get_spark
 from sparklda.vocab import vocab_from_docs
@@ -36,6 +38,22 @@ V = 10_000
 # Conservative vs the ~3x measured locally (cold-JIT variance is 2-4x on
 # this sandbox); the asymptotic gap only grows with vocabulary size.
 MIN_SPEEDUP = 1.5
+SEED = 7
+
+
+def uniform_spec(n_docs, words_per_doc, n_distinct, parts):
+    """The HIGHCARD corpus resized: docs of exactly ``words_per_doc`` words,
+    each drawn uniformly from ``n_distinct`` word ids."""
+    word = HIGHCARD.word.replace("10000000", str(n_distinct))
+    assert word != HIGHCARD.word, "HIGHCARD no longer draws from 10M ids"
+    return dataclasses.replace(
+        HIGHCARD,
+        n_docs=n_docs,
+        parts=parts,
+        max_words=words_per_doc,
+        n_words=str(words_per_doc),
+        word=word,
+    )
 
 
 @pytest.fixture(scope="module")
@@ -65,7 +83,7 @@ def r20_fullwindow(docs, v):
 def test_plan_shapes_old_vs_new(spark):
     """Cheap, always-on: the old shape really is the scale-killer plan and
     the new shape really avoids it, on the same synthetic input."""
-    docs = synth_docs(spark, 1000, 5, 100, 4)
+    docs = corpus(spark, uniform_spec(1000, 5, 100, 4), SEED)
     old_plan = formatted_plan(r20_fullwindow(docs, V))
     new_plan = formatted_plan(vocab_from_docs(docs, V))
     assert "SinglePartition" in old_plan, old_plan
@@ -78,15 +96,13 @@ def test_plan_shapes_old_vs_new(spark):
     reason="wall-clock A/B at 5M distinct words; set SPARK_GRAFT_SCALE_DEMO=1",
 )
 def test_takeordered_beats_fullwindow_at_scale(spark):
+    spec = uniform_spec(N_DOCS, WORDS_PER_DOC, N_DISTINCT, PARTS)
+
     def build_new():
-        return vocab_from_docs(
-            synth_docs(spark, N_DOCS, WORDS_PER_DOC, N_DISTINCT, PARTS), V
-        )
+        return vocab_from_docs(corpus(spark, spec, SEED), V)
 
     def build_old():
-        return r20_fullwindow(
-            synth_docs(spark, N_DOCS, WORDS_PER_DOC, N_DISTINCT, PARTS), V
-        )
+        return r20_fullwindow(corpus(spark, spec, SEED), V)
 
     sc = spark.sparkContext
     # Two warmups per path: JIT on this synthetic expression tree needs more

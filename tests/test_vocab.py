@@ -34,13 +34,16 @@ def _spark_rows(spark):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_vocab_topv_matches_duckdb_oracle(spark):
+def _oracle_rows(parquet, sql):
+    """Sorted rows of DuckDB ``sql`` over a ``documents`` view of ``parquet``."""
     con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{SF_DIR}/documents.parquet'"
-    )
-    oracle = sorted(
-        tuple(r) for r in con.execute(entry_mod.oracle_sql()["vocab_topv"]).fetchall()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{parquet}'")
+    return sorted(tuple(r) for r in con.execute(sql).fetchall())
+
+
+def test_vocab_topv_matches_duckdb_oracle(spark):
+    oracle = _oracle_rows(
+        f"{SF_DIR}/documents.parquet", entry_mod.oracle_sql()["vocab_topv"]
     )
     assert _spark_rows(spark) == oracle
 
@@ -124,9 +127,7 @@ def _vocab_matches_oracle(spark, tmp_path, rows, v):
     docs = spark.read.parquet(pq)
     srows = sorted(tuple(r) for r in vocab_from_docs(docs, v).collect())
 
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{pq}/*.parquet'")
-    orows = sorted(tuple(r) for r in con.execute(entry_mod.vocab_oracle_sql(v)).fetchall())
+    orows = _oracle_rows(f"{pq}/*.parquet", entry_mod.vocab_oracle_sql(v))
     assert srows == orows
     return srows
 
